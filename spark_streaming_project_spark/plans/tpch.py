@@ -2231,13 +2231,14 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     hz = orders.agg(F.max(F.to_date("o_orderdate")).alias("h"))
-    # persist: each chained range ntile runs an EAGER bounded sidecar
-    # job at build time (slice-count collect), and without the cache
-    # every sidecar re-scans orders and re-runs this aggregate — 4
-    # recomputes of the same per-customer frame (3 sidecars + the final
-    # action). The frame is one row per customer (bounded by the
-    # grouping key, ~1.5% of orders), so the cache is small; lifetime
-    # is bounded by the harness-level clearCache.
+    # persist: all three quintile axes read this frame — each axis's
+    # repartitionByRange samples it for range bounds, and the one
+    # batched sidecar collect in range_partitioned_ntiles materializes
+    # the three range-sliced copies of it. Without the cache each of
+    # those re-scans orders and re-runs this aggregate. The frame is one
+    # row per customer (bounded by the grouping key, ~1.5% of orders),
+    # so the cache is small; lifetime is bounded by the harness-level
+    # clearCache.
     rfm = (
         orders.crossJoin(F.broadcast(hz))
         .groupBy("o_custkey")

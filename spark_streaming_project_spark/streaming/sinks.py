@@ -49,11 +49,14 @@ def foreach_batch_per_batch_topk(
     tiebreak_asc: Sequence[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """X5 semantics (Consumer.scala:147-165): re-aggregate *within* each
-    micro-batch, keep the batch-local top-k, stamp ``batch_id``, append.
+    micro-batch, keep the batch-local top-k, stamp ``batch_id``.
 
     The output parquet dir accumulates one top-k per batch — exactly the
     reference's ``top_additive_products`` table shape (batch_id column,
-    init.sql:39-44).
+    init.sql:39-44). Each batch is written as its own ``batch_id=<id>``
+    partition with dynamic partition overwrite, so a batch that
+    foreachBatch replays after a crash replaces its earlier rows instead of
+    adding a second copy; readers get ``batch_id`` back as the last column.
 
     ``tiebreak_asc`` extends the ordering to a TOTAL order: without it, a
     tie on ``k_order_desc`` at the k boundary picks an arbitrary row per
@@ -69,7 +72,12 @@ def foreach_batch_per_batch_topk(
             .limit(k)
             .withColumn("batch_id", F.lit(batch_id))
         )
-        topk.write.mode("append").parquet(out_dir)
+        (
+            topk.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out_dir)
+        )
 
     return write
 

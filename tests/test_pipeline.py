@@ -5,6 +5,8 @@ content across micro-batches."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -12,10 +14,12 @@ from pyspark.sql import types as T
 from spark_streaming_project_spark.operators.parse import parse_envelopes
 from spark_streaming_project_spark.pipeline import (
     BRANCHES,
+    _batch_counts,
     read_snapshot,
     run_multiplex,
     run_per_query,
 )
+from spark_streaming_project_spark.schemas import PRODUCT
 from spark_streaming_project_spark.sources.fixtures import (
     make_envelopes,
     make_products,
@@ -35,6 +39,89 @@ def envelope_src(spark, tmp_path):
         3
     ).write.parquet(src)
     return src, products
+
+
+def _write_pages(spark, src, pages):
+    """One parquet file per envelope page: a 1-file trigger is one page."""
+    for env in pages:
+        spark.createDataFrame([(env,)], VALUE_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+
+def _drain_multiplex(spark, src, out, ckpt):
+    stream = parse_envelopes(
+        stream_parquet_dir(spark, src, VALUE_SCHEMA, max_files_per_trigger=1)
+    )
+    run_multiplex(spark, stream, out, ckpt).await_all(timeout_sec=120)
+
+
+def _snapshot_rows(spark, out):
+    return {
+        name: sorted(map(tuple, read_snapshot(spark, out, name).collect()))
+        for name in BRANCHES
+    }
+
+
+def _topk_rows(spark, out):
+    topk = spark.read.parquet(os.path.join(out, "top_additive_products"))
+    assert topk.dtypes[-1] == ("batch_id", "int")
+    return sorted(map(tuple, topk.collect()))
+
+
+def test_multiplex_smoke_matches_batch_and_replay_is_idempotent(spark, tmp_path):
+    """Default-run multiplex smoke: 3 pages at 1 page per trigger; every
+    snapshot equals its batch twin (columns, types, rows). Then batch 2 is
+    replayed the way a crash between its offset log and its commit makes
+    Spark replay it, and the tables and the top-k must not change."""
+    products = make_products(150, seed=5)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    _write_pages(spark, src, make_envelopes(products, page_size=50))
+    _drain_multiplex(spark, src, out, ckpt)
+
+    batch_df = spark.createDataFrame(products, PRODUCT)
+    tables = _snapshot_rows(spark, out)
+    for name, branch in BRANCHES.items():
+        want = branch(batch_df)
+        assert read_snapshot(spark, out, name).dtypes == want.dtypes, name
+        assert tables[name] == sorted(map(tuple, want.collect())), name
+    topk = _topk_rows(spark, out)
+    assert {r[-1] for r in topk} == {0, 1, 2}
+
+    commits = os.path.join(ckpt, "openfood_multiplex", "commits")
+    for f in ("2", ".2.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    _drain_multiplex(spark, src, out, ckpt)
+    assert os.path.exists(os.path.join(commits, "2"))  # batch 2 ran again
+    assert _snapshot_rows(spark, out) == tables
+    assert _topk_rows(spark, out) == topk
+
+
+def test_multiplex_trigger_after_crashed_publish(spark, tmp_path):
+    """A crash mid-publish leaves the newest snapshot next to a superseded
+    one and a stale ``_staging``. The next trigger must merge from the
+    newest snapshot and leave only its own."""
+    products = make_products(150, seed=5)
+    pages = make_envelopes(products, page_size=50)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    _write_pages(spark, src, pages[:2])
+    _drain_multiplex(spark, src, out, ckpt)
+
+    state_dir = os.path.join(out, "complete_counts")
+    assert sorted(os.listdir(state_dir)) == ["state-1"]
+    page0 = _batch_counts(spark.createDataFrame(products[:50], PRODUCT))
+    page0.write.parquet(os.path.join(state_dir, "state-0"))
+    page0.write.parquet(os.path.join(state_dir, "_staging"))
+
+    _write_pages(spark, src, pages[2:])
+    _drain_multiplex(spark, src, out, ckpt)
+    assert sorted(os.listdir(state_dir)) == ["state-2"]
+    batch_df = spark.createDataFrame(products, PRODUCT)
+    assert _snapshot_rows(spark, out) == {
+        name: sorted(map(tuple, branch(batch_df).collect()))
+        for name, branch in BRANCHES.items()
+    }
 
 
 @pytest.mark.slow  # r14: driver-window gate (see conftest)
@@ -112,7 +199,6 @@ def test_full_topology_both_modes_rocksdb(spark, tmp_path, envelope_src):
         stream2,
         str(tmp_path / "mx_out"),
         str(tmp_path / "mx_ckpt"),
-        state_store_provider="rocksdb",
     )
     r2.await_all(timeout_sec=240)
 
